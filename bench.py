@@ -230,6 +230,8 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001
         errors[f"chain_ingest_{CHAIN_BLOCKS}"] = repr(exc)[:300]
 
+    # an errored entry has no timing, so the total covers only the
+    # entries that ran: `complete` says whether it is the whole suite's
     total = round(sum(timings.values()), 3)
     out: dict = {
         "metric": "suite_total_runtime",
@@ -238,6 +240,8 @@ def main() -> None:
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "pyspark": __import__("pyspark").__version__,
+        "failed": len(errors),
+        "complete": not errors,
     }
     if errors:
         out["errors"] = errors

@@ -20,11 +20,15 @@ for rollback (the reference keeps 10 MVStore versions).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators import normalize as N
 from ..operators.utxo import spent_inputs
@@ -32,6 +36,42 @@ from ..sources.blocks import BLOCK_SCHEMA
 
 KEEP_VERSIONS = 10  # MvStorage.scala:298
 COMPACT_EVERY = 10  # BlockWriter.scala:79-83 compaction cadence analog
+
+# the per-version `headers/` sidecar; the same columns and types Spark
+# writes for `_batch_headers`, so older Spark-written sidecars read alike
+HEADER_SCHEMA = pa.schema(
+    [
+        ("block_id", pa.string()),
+        ("height", pa.int32()),
+        ("parent_id", pa.string()),
+    ]
+)
+Header = tuple[str, int, str]  # (block_id, height, parent_id)
+
+
+def _read_headers(hdir: str) -> list[Header]:
+    """Header rows of one sidecar dir (none if the version has no
+    sidecar), read on the driver; pyarrow skips Spark's `_SUCCESS` and
+    `.crc` files."""
+    if not os.path.exists(hdir):
+        return []
+    t = pq.read_table(hdir, columns=HEADER_SCHEMA.names)
+    return list(zip(*(t.column(c).to_pylist() for c in HEADER_SCHEMA.names)))
+
+
+def _spark_schema(d: str) -> StructType:
+    """The schema Spark recorded in the footer of a part file it wrote
+    under `d`, read on the driver. Spark's own parquet schema inference
+    reads the same footer, but in a Spark job of its own per read."""
+    part = min(
+        n
+        for n in os.listdir(d)
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    )
+    meta = pq.read_schema(os.path.join(d, part)).metadata
+    return StructType.fromJson(
+        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+    )
 
 
 class UtxoState:
@@ -51,6 +91,11 @@ class UtxoState:
     only versions older than a base that the retained window no longer
     needs. On Delta-capable storage the whole class collapses to
     `MERGE INTO utxo` + `RESTORE VERSION AS OF`.
+
+    The fork-aware path's `headers/` sidecar and `_tip` marker are tiny
+    and always held on the driver already, so they are written and read
+    there (pyarrow, plain files), never through a Spark job; the state
+    dir is driver-local for the atomic renames anyway.
     """
 
     def __init__(
@@ -68,6 +113,14 @@ class UtxoState:
 
     def _vdir(self, v: int) -> str:
         return os.path.join(self.dir, f"v{v}")
+
+    def _hdir(self, v: int) -> str:
+        return os.path.join(self._vdir(v), "headers")
+
+    def _read_parquet(self, *dirs: str) -> DataFrame:
+        """Spark-written delta dirs that share one schema, read with the
+        first dir's footer schema: no schema-inference job."""
+        return self.spark.read.schema(_spark_schema(dirs[0])).parquet(*dirs)
 
     def _has_base(self, v: int) -> bool:
         return os.path.exists(os.path.join(self._vdir(v), "base"))
@@ -96,17 +149,19 @@ class UtxoState:
         ]
         spent_dirs = [os.path.join(self._vdir(x), "spent") for x in vs if x > b]
         base_df = (
-            self.spark.read.parquet(os.path.join(self._vdir(b), "base"))
+            self._read_parquet(os.path.join(self._vdir(b), "base"))
             if b
             else None
         )
         if not created_dirs:
             return base_df
-        created = self.spark.read.parquet(*created_dirs)
+        created = self._read_parquet(*created_dirs)
         merged = (
             created if base_df is None else base_df.unionByName(created)
         ).dropDuplicates(["box_id"])
-        spent = self.spark.read.parquet(*spent_dirs).select("box_id")
+        # spent dirs written before spends carried a height lack that
+        # column; only box_id is read, so either dir's schema serves
+        spent = self._read_parquet(*spent_dirs).select("box_id")
         return merged.join(spent, "box_id", "left_anti")
 
     def batch_version(self, batch_id: int) -> int | None:
@@ -119,30 +174,36 @@ class UtxoState:
                         return v
         return None
 
+    def _marker_tip(self, v: int) -> tuple[int, str] | None:
+        """The `_tip` marker written by version `v` itself, if any."""
+        marker = os.path.join(self._vdir(v), "_tip")
+        if not os.path.exists(marker):
+            return None
+        with open(marker) as f:
+            h, _, bid = f.read().strip().partition(":")
+        return int(h), bid
+
     def tip(self, version: int | None = None) -> tuple[int, str] | None:
         """(height, block_id) recorded at `version` (default: newest
         version carrying one) — the chain cursor the fork-aware
         scheduler compares branches against."""
         v = self.current_version() if version is None else version
         for x in reversed([y for y in self.versions() if y <= v]):
-            marker = os.path.join(self._vdir(x), "_tip")
-            if os.path.exists(marker):
-                with open(marker) as f:
-                    h, _, bid = f.read().strip().partition(":")
-                return int(h), bid
+            t = self._marker_tip(x)
+            if t is not None:
+                return t
         return None
 
     def applied_headers(self) -> dict[str, tuple[int, str]]:
         """{block_id: (height, parent_id)} over the RETAINED versions'
         header sidecars — the bounded recent-chain cache the reference's
         scheduler keeps in memory (C1): fork depth beyond the retention
-        window is unrecoverable anyway, so this never grows O(chain)."""
+        window is unrecoverable anyway, so this never grows O(chain).
+        Read on the driver with pyarrow: no Spark job."""
         out: dict[str, tuple[int, str]] = {}
         for v in self.versions():
-            hdir = os.path.join(self._vdir(v), "headers")
-            if os.path.exists(hdir):
-                for r in self.spark.read.parquet(hdir).collect():
-                    out[r["block_id"]] = (r["height"], r["parent_id"])
+            for bid, h, parent in _read_headers(self._hdir(v)):
+                out[bid] = (h, parent)
         return out
 
     def commit(
@@ -150,7 +211,7 @@ class UtxoState:
         created: DataFrame,
         spent: DataFrame,
         batch_id: int | None = None,
-        headers: DataFrame | None = None,
+        headers: list[Header] | None = None,
         tip: tuple[int, str] | None = None,
     ) -> int:
         """O(batch) delta commit: write the batch's created rows and
@@ -164,13 +225,20 @@ class UtxoState:
         so the batch id is recorded inside the version dir (same atomic
         rename) and a replay returns the already-published version
         instead of double-applying (the reference gets this from
-        MVStore's transactional per-block commit)."""
+        MVStore's transactional per-block commit).
+
+        `headers` are the committed blocks' `(block_id, height,
+        parent_id)` rows, held by the caller on the driver; they are
+        written there as one parquet file under `headers/` inside the
+        same atomic rename, with no Spark job."""
         if batch_id is not None:
             existing = self.batch_version(batch_id)
             if existing is not None:
                 return existing
         v = self.current_version() + 1
         tmp = os.path.join(self.dir, f".tmp_v{v}")
+        # a crash can leave a half-written tmp dir: never publish its files
+        shutil.rmtree(tmp, ignore_errors=True)
         created.write.mode("overwrite").parquet(os.path.join(tmp, "created"))
         # keep the spending block's height alongside the id: reads only
         # ever project box_id, but a mid-version fork rollback must split
@@ -185,9 +253,13 @@ class UtxoState:
             with open(os.path.join(tmp, "_batch_id"), "w") as f:
                 f.write(str(batch_id))
         if headers is not None:
-            headers.select("block_id", "height", "parent_id").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(tmp, "headers"))
+            hdir = os.path.join(tmp, "headers")
+            os.makedirs(hdir)
+            rows = [dict(zip(HEADER_SCHEMA.names, r)) for r in headers]
+            pq.write_table(
+                pa.Table.from_pylist(rows, schema=HEADER_SCHEMA),
+                os.path.join(hdir, "part-00000.parquet"),
+            )
         if tip is not None:
             with open(os.path.join(tmp, "_tip"), "w") as f:
                 f.write(f"{tip[0]}:{tip[1]}")
@@ -221,23 +293,25 @@ class UtxoState:
 
     def deltas_above(
         self, version: int, below_height: int
-    ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    ) -> tuple[DataFrame, DataFrame, list[Header]]:
         """(created, spent, headers) rows of the versions strictly above
         `version`, restricted to blocks BELOW `below_height` — the
         shared-ancestor slice a mid-version fork rollback must preserve
         (the divergence can fall inside a multi-block version, so the
         rolled-back versions hold blocks the arriving branch never
-        re-supplies). Eagerly materialized (localCheckpoint) so the
-        caller may delete the source version dirs immediately after;
-        volume is bounded by the retained rollback window, never
-        O(state)."""
+        re-supplies). created/spent are eagerly materialized
+        (localCheckpoint) and the header rows are read into a driver
+        list, so the caller may delete the source version dirs
+        immediately after; volume is bounded by the retained rollback
+        window, never O(state)."""
         vs = [v for v in self.versions() if v > version]
         cdirs = [os.path.join(self._vdir(v), "created") for v in vs]
         sdirs = [os.path.join(self._vdir(v), "spent") for v in vs]
-        hdirs = [
-            os.path.join(self._vdir(v), "headers")
+        headers = [
+            r
             for v in vs
-            if os.path.exists(os.path.join(self._vdir(v), "headers"))
+            for r in _read_headers(self._hdir(v))
+            if r[1] < below_height
         ]
         created = self.spark.read.parquet(*cdirs).filter(
             F.col("height") < below_height
@@ -261,19 +335,10 @@ class UtxoState:
                 "split those versions at the divergence"
             )
         spent = spent.filter(F.col("height") < below_height)
-        headers = (
-            self.spark.read.parquet(*hdirs).filter(
-                F.col("height") < below_height
-            )
-            if hdirs
-            else None
-        )
         return (
             created.localCheckpoint(eager=True),
             spent.localCheckpoint(eager=True),
-            headers.localCheckpoint(eager=True)
-            if headers is not None
-            else None,
+            headers,
         )
 
 
@@ -341,6 +406,8 @@ def apply_block_batch_forkaware(
     Driver-side work is O(|batch headers| + retained window): only the
     3-string header tuples are collected, never block bodies — the same
     bounded recent-chain cache the reference scheduler holds in memory.
+    That collect is the only Spark job a losing or orphan batch runs:
+    the retained headers and tips are read on the driver.
     Fork depth beyond the rollback retention raises (the reference
     cannot rewind past its kept MVStore versions either)."""
     if batch_id is not None:
@@ -359,8 +426,9 @@ def apply_block_batch_forkaware(
     # best linked tip in the batch: walk parents through batch headers
     # until hitting an applied block (divergence anchor) or a chain root
     best: tuple[int, str, int] | None = None  # (tip_h, tip_id, diverge_h)
+    parents = {p for (_h, p) in hdrs.values()}
     for bid, (h, _p) in hdrs.items():
-        if any(p == bid for (_hh, p) in hdrs.values()):
+        if bid in parents:
             continue  # not a tip within the batch
         node, anchor_child_h = bid, None
         seen = set()
@@ -395,11 +463,13 @@ def apply_block_batch_forkaware(
         # branch: strictly-longer wins, ties keep the incumbent
         if tip_h <= cur_tip[0]:
             return None
-        target = None
+        # newest version whose tip lies below the divergence, in one pass
+        # over the markers (a version without one inherits the last tip)
+        target = target_tip = t = None
         for v in state.versions():
-            t = state.tip(v)
+            t = state._marker_tip(v) or t
             if t is not None and t[0] < diverge_h:
-                target = v
+                target, target_tip = v, t
         if target is None and diverge_h > 1:
             raise RuntimeError(
                 f"fork at height {diverge_h} is below the retained rollback "
@@ -410,7 +480,7 @@ def apply_block_batch_forkaware(
         if (
             target is not None
             and diverge_h > 1
-            and state.tip(target)[0] != diverge_h - 1
+            and target_tip[0] != diverge_h - 1
         ):
             # the divergence falls INSIDE a version (e.g. versions cover
             # [1..7],[8..10] and the fork parent is block 9): rolling back
@@ -442,7 +512,7 @@ def apply_block_batch_forkaware(
         new_boxes,
         spent,
         batch_id=batch_id,
-        headers=_batch_headers(win),
+        headers=[(b, *hdrs[b]) for b in reversed(path)],
         tip=(tip_h, tip_id),
     )
 

@@ -515,6 +515,50 @@ def test_fork_mid_version_divergence_preserves_shared_ancestors(
     they are preserved from the rolled-back version's deltas and
     re-committed before the branch applies. Final state must equal a
     batch recompute of the winning chain 1..9 + branch."""
+    _mid_version_fork(spark, tmp_path)
+
+
+def test_spark_written_header_sidecars_still_read(spark, tmp_path):
+    """Back-compat: a state whose `v*/headers/` dirs were written by
+    `DataFrame.write.parquet` (with `_SUCCESS` and `.crc` files beside
+    the part files) reads through the driver-side sidecar reader into
+    the same header map, with the same column types, and the mid-version
+    fork over it still preserves the shared ancestors."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from ergo_uexplorer_spark.sources.blocks import read_blocks
+    from ergo_uexplorer_spark.streaming.incremental import _batch_headers
+
+    def to_spark_written(state, batch_paths, blocks):
+        want = {
+            b["header"]["id"]: (b["header"]["height"], b["header"]["parentId"])
+            for b in blocks
+        }
+        assert state.applied_headers() == want
+        new_schema = pq.read_table(state._hdir(1)).schema
+        for v, path in batch_paths.items():
+            hdir = state._hdir(v)
+            shutil.rmtree(hdir)
+            _batch_headers(read_blocks(spark, path)).write.parquet(hdir)
+            names = os.listdir(hdir)
+            assert "_SUCCESS" in names
+            assert any(n.endswith(".crc") for n in names)
+        assert state.applied_headers() == want
+        assert pq.read_table(state._hdir(1)).schema.equals(
+            new_schema, check_metadata=False
+        )
+
+    _mid_version_fork(spark, tmp_path, before_fork=to_spark_written)
+
+
+def _mid_version_fork(spark, tmp_path, before_fork=None):
+    """Versions [1..7] and [8..10], then a winning branch whose parent is
+    block 9, then a later one anchored at the preserved block 8; each
+    final state must equal the batch recompute of its winning chain.
+    `before_fork(state, {version: batch path}, applied blocks)` runs
+    between the two plain commits and the first fork."""
     from ergo_uexplorer_spark.sources.blocks import read_blocks
     from ergo_uexplorer_spark.streaming.incremental import (
         apply_block_batch_forkaware,
@@ -526,8 +570,11 @@ def test_fork_mid_version_divergence_preserves_shared_ancestors(
 
     state = UtxoState(spark, str(tmp_path / "state"))
 
+    def batch_path(lo, hi):
+        return str(tmp_path / f"b_{lo}_{hi}.jsonl.gz")
+
     def apply_heights(blocks, lo, hi, batch_id):
-        p = str(tmp_path / f"b_{lo}_{hi}.jsonl.gz")
+        p = batch_path(lo, hi)
         write_jsonl_gz(
             [b for b in blocks if lo <= b["header"]["height"] <= hi], p
         )
@@ -538,6 +585,9 @@ def test_fork_mid_version_divergence_preserves_shared_ancestors(
     assert apply_heights(g.blocks, 1, 7, 0) == 1
     assert apply_heights(g.blocks, 8, 10, 1) == 2
     assert state.tip() == (10, g.blocks[-1]["header"]["id"])
+    if before_fork is not None:
+        paths = {1: batch_path(1, 7), 2: batch_path(8, 10)}
+        before_fork(state, paths, g.blocks)
 
     # branch heights 10..11 wins (11 > 10); divergence height 10 falls
     # inside version 2 ([8..10]) — blocks 8..9 must survive the rollback
@@ -585,6 +635,77 @@ def test_fork_mid_version_divergence_preserves_shared_ancestors(
         r["box_id"] for r in state.read().select("box_id").collect()
     }
     assert got2 == want2
+
+
+def _jobs(spark, fn):
+    """(fn(), Spark jobs it submitted), counted as the status tracker's
+    job-id delta once the listener bus has caught up."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    out = fn()
+    bus.waitUntilEmpty()
+    return out, len(set(sc.statusTracker().getJobIdsForGroup(None)) - before)
+
+
+def test_fork_aware_job_counts_do_not_grow_with_retained_versions(
+    spark, tmp_path
+):
+    """The retained header cache lives in driver-read sidecars: reading
+    it runs no Spark job, a losing or orphan batch runs only its header
+    collect, and an extend costs the same jobs over 9 retained versions
+    as over 3. Reading the sidecars through Spark again (two jobs per
+    version) fails every one of these. Building the state's read plan
+    runs no job either (no parquet schema inference)."""
+    from ergo_uexplorer_spark.sources.blocks import read_blocks
+    from ergo_uexplorer_spark.streaming.incremental import (
+        apply_block_batch_forkaware,
+    )
+
+    g = ChainGen(seed=55)
+    g.generate(30)
+    # no compaction: every extend below is a plain delta commit
+    state = UtxoState(spark, str(tmp_path / "state"), compact_every=0)
+
+    def raw(blocks, name):
+        p = str(tmp_path / f"{name}.jsonl.gz")
+        write_jsonl_gz(blocks, p)
+        return read_blocks(spark, p)
+
+    extends = [raw(g.blocks[i : i + 3], f"e{i}") for i in range(0, 30, 3)]
+    for df in extends[:3]:
+        apply_block_batch_forkaware(state, df)
+    v, jobs_over_3 = _jobs(
+        spark, lambda: apply_block_batch_forkaware(state, extends[3])
+    )
+    assert v == 4
+    for df in extends[4:9]:
+        apply_block_batch_forkaware(state, df)
+    assert len(state.versions()) == 9
+    v, jobs_over_9 = _jobs(
+        spark, lambda: apply_block_batch_forkaware(state, extends[9])
+    )
+    assert v == 10
+    assert jobs_over_9 == jobs_over_3
+
+    hdrs, jobs = _jobs(spark, state.applied_headers)
+    assert jobs == 0 and len(hdrs) == 30
+    # the read plan takes its schemas from driver-read footers
+    _, jobs = _jobs(spark, state.read)
+    assert jobs == 0
+
+    tie = raw(
+        [b for b in g.fork(28, 0, "tie") if b["header"]["height"] >= 28],
+        "lose",
+    )
+    foreign = ChainGen(seed=999)
+    foreign.generate(8)
+    orphan = raw(foreign.blocks[4:], "orphan")
+    for df in (tie, orphan):
+        v, jobs = _jobs(spark, lambda: apply_block_batch_forkaware(state, df))
+        assert v is None and jobs == 1
+    assert state.current_version() == 10
 
 
 def test_fork_aware_orphan_batch_is_noop(spark, tmp_path):
